@@ -1000,6 +1000,18 @@ def _encode_entropy(
     return bytes(out)
 
 
+def _quant_table(quant: np.ndarray | None) -> np.ndarray:
+    """The 8x8 table to quantize with and write as an 8-bit DQT:
+    all-ones by default. Out-of-range entries raise rather than wrap
+    into a corrupt DQT."""
+    if quant is None:
+        return np.ones((8, 8), dtype=np.int32)
+    quant = np.asarray(quant)
+    if quant.min() < 1 or quant.max() > 255:
+        raise ValueError("quantization table entries must be in 1..255")
+    return quant
+
+
 def encode_jpeg(
     pixels: np.ndarray,
     quant: np.ndarray | None = None,
@@ -1021,8 +1033,7 @@ def encode_jpeg(
         cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
         comps = [y, cb, cr]
     h, w = comps[0].shape
-    if quant is None:
-        quant = np.ones((8, 8), dtype=np.int32)
+    quant = _quant_table(quant)
     by, bx = (h + 7) // 8, (w + 7) // 8
     # one padded stack + one einsum for ALL components (round 15): the
     # per-component einsum/pad overhead dominated tiny images; the
@@ -1058,8 +1069,7 @@ def encode_jpeg_from_coeffs(
     blocks (each (by, bx, 8, 8) int32) — the exact-entropy-layer fixture
     path: what goes in is bit-for-bit what decode_jpeg_coeffs returns
     (times the quant table)."""
-    if quant is None:
-        quant = np.ones((8, 8), dtype=np.int32)
+    quant = _quant_table(quant)
     return _encode_entropy(
         [p.astype(np.int32) for p in planes], [quant.astype(np.int32)],
         w, h, restart_interval,

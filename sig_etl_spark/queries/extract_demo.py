@@ -358,7 +358,10 @@ _JDBC_STAGE_CLEANUP = [False]
 
 def _jdbc_stage_dir() -> str:
     """Pid-keyed Derby staging directory: reap dead-pid siblings, remove
-    this process's own dir at exit (ADVICE r14 leak fix)."""
+    this process's own dir at exit (ADVICE r14 leak fix). On the first
+    call in a process, a dir already under our own pid can only be a
+    crashed predecessor's whose pid was recycled: reap it too, or its
+    stale db.lck makes Derby refuse to boot."""
     import atexit
     import shutil
     import tempfile
@@ -385,6 +388,7 @@ def _jdbc_stage_dir() -> str:
             pass  # alive under another uid — not ours to reap
     d = os.path.join(base, f"sig_etl_stage_jdbc_{os.getpid()}")
     if not _JDBC_STAGE_CLEANUP[0]:
+        shutil.rmtree(d, ignore_errors=True)
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         _JDBC_STAGE_CLEANUP[0] = True
     return d

@@ -1,6 +1,6 @@
 """SparkSession builder for the engine.
 
-Defaults are chosen for correctness at local[32] test scale while keeping
+Defaults are chosen for correctness at local test scale while keeping
 the knobs that matter at 100 TB explicit:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
@@ -15,7 +15,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (its affinity mask, which a container's cpuset can narrow below
+    ``os.cpu_count()``)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -27,9 +32,9 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     On a cluster, ``master`` comes from spark-submit; locally we default to
-    ``local[$SPARK_GRAFT_CPUS]``.
+    ``local[N]`` with N shuffle partitions, N from :func:`_local_cpus`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         # Adaptive execution: coalesce post-shuffle partitions, split skewed
@@ -42,7 +47,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Parquet scans: allow large-enough splits that small tables stay in
         # one partition but 100 TB tables still parallelize (128 MiB default).

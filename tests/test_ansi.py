@@ -27,6 +27,19 @@ def test_session_is_ansi(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
 
 
+def test_session_cpus_default_to_affinity(monkeypatch):
+    """Unset SPARK_GRAFT_CPUS falls back to the CPUs this process may use,
+    not a fixed count; a set value wins."""
+    import os
+
+    from sig_etl_spark.session import _local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _local_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _local_cpus() == "3"
+
+
 def test_long_date_invalid_is_null(spark):
     df = spark.createDataFrame([("not a date",), ("November 5,2024",)], ["raw"])
     got = [

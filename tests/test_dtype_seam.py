@@ -59,6 +59,18 @@ def test_probe_pair_deregistered():
     }
 
 
+def test_no_expected_red_rows_registered():
+    """The registry must contain ZERO expected-red rows — the hugeint
+    probe pair is a pytest fixture (queries/diag_seam.py PROBE_QUERIES),
+    not a registered query, so "all registry rows green" is statable
+    without a footnote."""
+    assert not (EXPECTED_DIVERGENT & set(QUERIES)), (
+        "expected-divergent probes must not be registered"
+    )
+    assert "diag_seam_hugeint_raw" not in QUERIES
+    assert "diag_seam_hugeint_cast" not in QUERIES
+
+
 def test_raw_probe_is_whitelisted_and_would_be_flagged(sf_dir):
     """The deliberately-divergent probe must (a) be whitelisted so the
     full scan stays clean, and (b) actually exhibit the seam — DuckDB

@@ -346,6 +346,22 @@ def test_jpeg_quant_table_respected():
     assert np.abs(ac).max() > 0, "fixture too flat to test AC dequant"
 
 
+@pytest.mark.parametrize("bad", [0, 256, 300, -1])
+def test_jpeg_quant_table_out_of_range_raises(bad):
+    """DQT entries are 8-bit and a zero divisor is meaningless: a table
+    entry outside 1..255 must raise, not wrap into a corrupt DQT."""
+    import numpy as np
+
+    tex = np.zeros((8, 8), dtype=np.uint8)
+    q = np.full((8, 8), 4, dtype=np.int32)
+    q[3, 5] = bad
+    with pytest.raises(ValueError, match="1..255"):
+        M.encode_jpeg(tex, quant=q)
+    planes = [np.zeros((1, 1, 8, 8), dtype=np.int32)]
+    with pytest.raises(ValueError, match="1..255"):
+        M.encode_jpeg_from_coeffs(planes, 8, 8, quant=q)
+
+
 def test_jpeg_decode_rejects_corruption():
     import struct
 

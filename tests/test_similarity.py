@@ -759,6 +759,46 @@ def test_ivfpq_tiers_identical_full_query(spark, sf_dir):
     assert a == b and a
 
 
+def test_ivfpq_float_vectors_probe_like_double(spark):
+    """ARRAY<FLOAT> input returns the same rows as the same vectors cast
+    to ARRAY<DOUBLE>. The query sits one float ulp off the bisector of
+    two centroids (md5-smallest ids 6 and 9): the exact double dots put
+    it nearer centroid 9, while dot products rounded to float per
+    element put it nearer centroid 6, so with nprobe=1 a probe that
+    skipped the DOUBLE casts would return cell 6's rows instead of
+    cell 9's."""
+    a, b = 0.8184808492660522, 0.818480908870697  # adjacent floats
+    p, r = 0.6348933577537537, 0.012292057275772095
+    corpus = spark.createDataFrame(
+        [
+            (6, [p, r, 0.0, 0.0]),
+            (9, [r, p, 0.0, 0.0]),
+            (11, [p, r, 0.25, 0.0]),
+            (7, [r, p, 0.0, 0.25]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(0, [a, b, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+
+    def run(q, c, impl):
+        return sorted(
+            S.ivfpq_topk(
+                q, c, "vec_id", "embedding", k=2, n_centroids=2, nprobe=1,
+                m_subs=2, ksub=2, dim=4, shortlist=10, impl=impl,
+            ).collect()
+        )
+
+    def dbl(df):
+        return df.withColumn("embedding", F.col("embedding").cast("array<double>"))
+
+    for impl in ("numpy", "expr"):
+        want = run(dbl(queries), dbl(corpus), impl)
+        assert sorted(r.corpus_id for r in want) == [7, 9], (impl, want)
+        assert run(queries, corpus, impl) == want, impl
+
+
 def test_brute_force_tiers_identical_and_nan_policy(spark, sf_dir):
     """brute_force_topk(impl='numpy') == impl='expr' row-for-row on the
     fixture, AND on a pathological frame (zero vectors, NULL vectors,

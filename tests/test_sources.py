@@ -194,6 +194,30 @@ def test_jdbc_query_partitioned_read(spark, derby_url):
     assert sorted(r.ID for r in df.collect()) == list(range(20))
 
 
+def test_jdbc_stage_dir_reaps_own_pid_leftover_once(tmp_path, monkeypatch):
+    """A stage dir already under this process's pid on the first call can
+    only be a crashed predecessor's (recycled pid): it is removed, stale
+    db.lck included. Later calls keep the dir this process is using."""
+    import os
+    import tempfile
+
+    from sig_etl_spark.queries import extract_demo
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(extract_demo, "_JDBC_STAGE_CLEANUP", [False])
+    stale = tmp_path / f"sig_etl_stage_jdbc_{os.getpid()}"
+    stale.mkdir()
+    (stale / "db.lck").write_bytes(b"stale")
+
+    assert extract_demo._jdbc_stage_dir() == str(stale)
+    assert not stale.exists()
+
+    stale.mkdir()
+    (stale / "db.lck").write_bytes(b"live")
+    assert extract_demo._jdbc_stage_dir() == str(stale)
+    assert (stale / "db.lck").exists()
+
+
 def test_read_excel_sheet_index_numeric_order(spark, tmp_path):
     """sheet=N must map to sheetN+1.xml numerically, not lexicographically
     (sheet10.xml sorts before sheet2.xml as a string)."""
